@@ -421,12 +421,10 @@ class IncrementalState:
                 f"{self._manifest.get('n_buckets')}, opened with {n_buckets}"
             )
         self.exact_mode_checked = False
-        if self._manifest:
-            # full sweep once per open: commit-time GC is scoped to the
-            # batch's affected buckets, so orphans left by a crash between
-            # a commit and its GC (or by a pre-scoped-GC writer) are
-            # collected here instead of on every commit
-            self._gc(None)
+        # Opening never deletes: a reader must not sweep the leaves a writer
+        # has written but not yet published. The full recovery sweep runs
+        # after this handle's first commit (see commit).
+        self._swept = False
 
     # -- manifest ----------------------------------------------------------
 
@@ -469,6 +467,17 @@ class IncrementalState:
         ``fold_batch`` must be re-resolved rather than folded)."""
         return bool(self._manifest) and self._manifest.get("exact_mode", False)
 
+    def _schema(self, table: str):
+        import json
+
+        from pyspark.sql.types import StructType
+
+        return StructType.fromJson(json.loads(self._manifest["schemas"][table]))
+
+    def _read_leaves(self, table: str, paths: list[str]) -> DataFrame:
+        # the committed schema spares Spark the footer-reading inference job
+        return self.spark.read.schema(self._schema(table)).parquet(*paths)
+
     def read(self, table: str) -> DataFrame:
         """Current contents of a table (live generation of every bucket).
         An empty table (e.g. state bootstrapped from a zero-row first
@@ -476,15 +485,8 @@ class IncrementalState:
         gens = self._manifest["tables"][table]
         paths = [self._leaf(table, int(k), g) for k, g in sorted(gens.items())]
         if not paths:
-            import json
-
-            from pyspark.sql.types import StructType
-
-            schema = StructType.fromJson(
-                json.loads(self._manifest["schemas"][table])
-            )
-            return self.spark.createDataFrame([], schema)
-        return self.spark.read.parquet(*paths)
+            return self.spark.createDataFrame([], self._schema(table))
+        return self._read_leaves(table, paths)
 
     def read_buckets(self, table: str, buckets: list[int]) -> DataFrame | None:
         """Only the named buckets (partition-pruned read); None if none of
@@ -493,15 +495,21 @@ class IncrementalState:
         paths = [self._leaf(table, b, gens[str(b)]) for b in buckets if str(b) in gens]
         if not paths:
             return None
-        return self.spark.read.parquet(*paths)
+        return self._read_leaves(table, paths)
 
     # -- commit ------------------------------------------------------------
 
-    def commit(self, batch_id: int, writes: dict[str, tuple[DataFrame, list[int]]]) -> None:
+    def commit(
+        self,
+        batch_id: int,
+        writes: dict[str, tuple[DataFrame, list[int]]],
+        exact_mode: bool,
+    ) -> None:
         """Persist ``{table: (content, affected_buckets)}`` as generation
         ``batch_id`` of the affected buckets, then atomically publish the
         new manifest. ``content`` must hold exactly the new rows of the
-        affected buckets (pass-through rows of other buckets excluded)."""
+        affected buckets (pass-through rows of other buckets excluded).
+        ``exact_mode`` is recorded in the manifest (see :meth:`exact_mode`)."""
         import json
         import os
 
@@ -534,7 +542,7 @@ class IncrementalState:
         manifest = {
             "batch_id": batch_id,
             "n_buckets": self.n_buckets,
-            "exact_mode": True,
+            "exact_mode": exact_mode,
             "tables": new_tables,
             "schemas": schemas,
         }
@@ -545,15 +553,18 @@ class IncrementalState:
         self._manifest = manifest
         # commit already knows exactly which buckets changed — GC only
         # those (the per-commit full walk was O(n_buckets × tables) of
-        # driver listdir calls per batch; orphans elsewhere are swept once
-        # at open, see __init__)
-        self._gc({t: writes[t][1] for t in self.TABLES})
+        # driver listdir calls per batch). Orphans elsewhere, left by a
+        # crash between a commit and its GC, are swept once per handle,
+        # after its first commit: only a writer may delete, and a writer's
+        # own unpublished leaves never exist at that point.
+        self._gc({t: writes[t][1] for t in self.TABLES} if self._swept else None)
+        self._swept = True
 
     def _gc(self, affected: dict[str, list[int]] | None = None) -> None:
         """Delete generations the manifest no longer references. Runs after
         the commit point — a crash mid-GC leaves only unreferenced leaves.
-        ``affected`` limits the walk to those buckets per table (commit
-        path); None sweeps every bucket (open-time recovery sweep)."""
+        ``affected`` limits the walk to those buckets per table; None sweeps
+        every bucket (recovery sweep after a handle's first commit)."""
         import os
         import shutil
 
@@ -581,9 +592,23 @@ class IncrementalState:
                     os.rmdir(bpath)
 
 
-def _collect_buckets(df: DataFrame, expr) -> list[int]:
-    """Distinct bucket values of a delta-scoped frame (small by contract)."""
-    return [r[0] for r in df.select(expr.alias("b")).distinct().collect()]
+def _collect_buckets(
+    state: IncrementalState, frames: dict[str, DataFrame]
+) -> dict[str, list[int]]:
+    """Distinct buckets of each delta-scoped ``{table: frame}`` (small by
+    contract) under that table's :meth:`IncrementalState.bucket_expr`, in
+    ONE job: the frames are tagged with their table and unioned, so several
+    tables cost one driver round trip, not one each."""
+    from functools import reduce
+
+    tagged = [
+        df.select(F.lit(table).alias("t"), state.bucket_expr(table).alias("b"))
+        for table, df in frames.items()
+    ]
+    out: dict[str, list[int]] = {table: [] for table in frames}
+    for r in reduce(DataFrame.unionByName, tagged).distinct().collect():
+        out[r["t"]].append(r["b"])
+    return out
 
 
 def _touched_closure_bucketed(
@@ -597,13 +622,11 @@ def _touched_closure_bucketed(
     pure function of the equi-join key, so probing matching buckets loses
     no join partner. Returns (touched components, hops, buckets_read)."""
     spark = seed_keys.sparkSession
-    kidx_expr = state.bucket_expr("key_index")
-    comp_expr = state.bucket_expr("cluster_keys")
     touched = spark.createDataFrame([], "component long")
     frontier = seed_keys.select("key").distinct().localCheckpoint(eager=False)
     buckets_read = 0
     for hops in range(max_hops):
-        fb = _collect_buckets(frontier, kidx_expr)
+        fb = _collect_buckets(state, {"key_index": frontier})["key_index"]
         ki = state.read_buckets("key_index", fb)
         buckets_read += len(fb)
         if ki is None:
@@ -615,10 +638,12 @@ def _touched_closure_bucketed(
             .join(touched, "component", "left_anti")
             .localCheckpoint(eager=False)
         )
-        if new_comps.isEmpty():
+        # no bucket means no new component: this collect is also the
+        # fixpoint test
+        cb = _collect_buckets(state, {"cluster_keys": new_comps})["cluster_keys"]
+        if not cb:
             return touched, hops, buckets_read
         touched = touched.union(new_comps).localCheckpoint(eager=False)
-        cb = _collect_buckets(new_comps, comp_expr)
         ck = state.read_buckets("cluster_keys", cb)
         buckets_read += len(cb)
         if ck is None:
@@ -704,14 +729,9 @@ def fold_batch(
                 "members_by_comp": (membership.select("id", "component"), all_buckets),
                 "key_index": (keys, all_buckets),
             },
+            exact_mode=True,
         )
         return {"bootstrap": True, "delta_rows": delta.count() if collect_metrics else None}
-
-    silver_expr = state.bucket_expr("persons_silver")
-    member_expr = state.bucket_expr("membership")
-    keys_expr = state.bucket_expr("cluster_keys")
-    mcomp_expr = state.bucket_expr("members_by_comp")
-    kidx_expr = state.bucket_expr("key_index")
 
     # exact-mode precondition: the manifest marker covers state maintained
     # by this path; legacy stores (no marker) pay the membership probe once
@@ -735,7 +755,7 @@ def fold_batch(
         scope_ids = membership_full.join(touched, "component").select("id")
     else:
         touched, hops, buckets_read = _touched_closure_bucketed(state, seed_keys)
-        tb = _collect_buckets(touched, mcomp_expr)
+        tb = _collect_buckets(state, {"members_by_comp": touched})["members_by_comp"]
         mbc = state.read_buckets("members_by_comp", tb)
         buckets_read += len(tb)
         scope_ids = (
@@ -748,8 +768,9 @@ def fold_batch(
     metrics["hops"] = hops
 
     # --- re-resolve the scoped slice --------------------------------------
-    scope_read_ids = scope_ids.unionByName(delta_ids).distinct()
-    sread_buckets = _collect_buckets(scope_read_ids, silver_expr)
+    sread_buckets = _collect_buckets(
+        state, {"persons_silver": scope_ids.unionByName(delta_ids)}
+    )["persons_silver"]
     silver_subset = state.read_buckets("persons_silver", sread_buckets)
     buckets_read += len(sread_buckets)
     scoped_old = (
@@ -776,8 +797,27 @@ def fold_batch(
         metrics["scope_rows"] = scoped.count()
         metrics["delta_rows"] = delta.count()
 
+    # --- affected buckets of silver, membership and cluster_keys ----------
+    # silver: the delta's ids; membership: the scoped/delta/rescoped ids;
+    # cluster_keys: removals by touched comps, additions by rescoped ones.
+    # One tagged collect finds all three.
+    changed_ids = (
+        scope_ids.unionByName(delta_ids).unionByName(rescoped.select("id"))
+    ).distinct().localCheckpoint(eager=False)
+    key_comps = touched.unionByName(new_keys.select("component"))
+    affected = _collect_buckets(
+        state,
+        {
+            "persons_silver": delta_ids,
+            "membership": changed_ids,
+            "cluster_keys": key_comps,
+        },
+    )
+    silver_buckets = affected["persons_silver"]
+    member_buckets = affected["membership"]
+    key_buckets = affected["cluster_keys"]
+
     # --- silver: merge colliding ids only (delta-sized) -------------------
-    silver_buckets = _collect_buckets(delta_ids, silver_expr)
     old_silver = state.read_buckets("persons_silver", silver_buckets)
     if old_silver is None:
         silver_content = delta
@@ -795,11 +835,7 @@ def fold_batch(
         merge_rows = merge_input.count() if collect_metrics else None
     metrics["merge_rows"] = merge_rows
 
-    # --- membership: affected buckets are the scoped/delta/rescoped ids' --
-    changed_ids = (
-        scope_ids.unionByName(delta_ids).unionByName(rescoped.select("id"))
-    ).distinct().localCheckpoint(eager=False)
-    member_buckets = _collect_buckets(changed_ids, member_expr)
+    # --- membership -------------------------------------------------------
     old_member = state.read_buckets("membership", member_buckets)
     if old_member is None:
         member_content = rescoped
@@ -817,9 +853,7 @@ def fold_batch(
         ).join(F.broadcast(rescoped.select("id")), "id", "left_anti")
         member_content = surviving.unionByName(rescoped)
 
-    # --- cluster_keys: removals by touched comps, additions by rescoped ---
-    key_comps = touched.unionByName(new_keys.select("component")).distinct()
-    key_buckets = _collect_buckets(key_comps, keys_expr)
+    # --- cluster_keys -----------------------------------------------------
     old_keys = state.read_buckets("cluster_keys", key_buckets)
     buckets_read += len(key_buckets)
     if old_keys is None:
@@ -829,24 +863,38 @@ def fold_batch(
         keys_content = old_keys.join(
             F.broadcast(touched), "component", "left_anti"
         ).unionByName(new_keys)
-        # the touched components' OLD keys locate the key_index buckets
-        # whose rows must be dropped
         touched_old_keys = old_keys.join(
             F.broadcast(touched), "component", "semi"
         ).localCheckpoint(eager=False)
 
-    # --- members_by_comp: same rows as membership, bucketed by component --
-    mbc_comps = touched.unionByName(rescoped.select("component")).distinct()
-    if old_changed_rows is not None:
-        mbc_comps = mbc_comps.unionByName(old_changed_rows.select("component")).distinct()
+    # --- affected buckets of the two index tables -------------------------
     if legacy:
-        # migration: derive the full by-component copy from the pre-fold
-        # membership, then apply the same removals/additions
+        # migration: derive the full copies from the pre-fold tables, then
+        # apply the same removals/additions
         mbc_buckets = list(range(state.n_buckets))
         old_mbc = membership_full.select("id", "component")
+        kidx_buckets = list(range(state.n_buckets))
+        old_kidx = cluster_keys_full
     else:
-        mbc_buckets = _collect_buckets(mbc_comps, mcomp_expr)
+        # members_by_comp: the touched, rescoped and old components of
+        # re-resolved ids; key_index: the new keys and the touched
+        # components' OLD keys (whose rows must be dropped)
+        mbc_comps = touched.unionByName(rescoped.select("component"))
+        if old_changed_rows is not None:
+            mbc_comps = mbc_comps.unionByName(old_changed_rows.select("component"))
+        kidx_key_rows = new_keys.select("key")
+        if touched_old_keys is not None:
+            kidx_key_rows = kidx_key_rows.unionByName(touched_old_keys.select("key"))
+        affected = _collect_buckets(
+            state, {"members_by_comp": mbc_comps, "key_index": kidx_key_rows}
+        )
+        mbc_buckets = affected["members_by_comp"]
+        kidx_buckets = affected["key_index"]
         old_mbc = state.read_buckets("members_by_comp", mbc_buckets)
+        old_kidx = state.read_buckets("key_index", kidx_buckets)
+        buckets_read += len(kidx_buckets)
+
+    # --- members_by_comp: same rows as membership, bucketed by component --
     if old_mbc is None:
         mbc_content = rescoped.select("id", "component")
     else:
@@ -856,16 +904,6 @@ def fold_batch(
         mbc_content = mbc_surviving.unionByName(rescoped.select("id", "component"))
 
     # --- key_index: same rows as cluster_keys, bucketed by key ------------
-    if legacy:
-        kidx_buckets = list(range(state.n_buckets))
-        old_kidx = cluster_keys_full
-    else:
-        kidx_key_rows = new_keys.select("key")
-        if touched_old_keys is not None:
-            kidx_key_rows = kidx_key_rows.unionByName(touched_old_keys.select("key"))
-        kidx_buckets = _collect_buckets(kidx_key_rows.distinct(), kidx_expr)
-        old_kidx = state.read_buckets("key_index", kidx_buckets)
-        buckets_read += len(kidx_buckets)
     if old_kidx is None:
         kidx_content = new_keys
     else:
@@ -889,6 +927,9 @@ def fold_batch(
             "members_by_comp": (mbc_content, mbc_buckets),
             "key_index": (kidx_content, kidx_buckets),
         },
+        # reduce_people over blocking keys alone: no external ids, no
+        # similarity edges
+        exact_mode=True,
     )
     return metrics
 

@@ -114,3 +114,46 @@ def test_is_ignored_email(spark):
     ]
     assert _eval(spark, b.is_ignored_email, trues) == [True] * len(trues)
     assert _eval(spark, b.is_ignored_email, falses) == [False] * len(falses)
+
+
+def test_in_set_matches_isin(spark):
+    """The one-call set predicate agrees with ``Column.isin`` row for row,
+    on quotes, backslashes, non-ASCII text, the empty string and NULL."""
+    from identity_matching_spark.operators.blacklist import _in_set
+
+    values = frozenset({"o'brien", "back\\slash", "it's\\'", "josé", "日本語", "", "plain"})
+    data = ["o'brien", "o\\'brien", "back\\slash", "backslash", "it's\\'", "josé", "jose",
+            "日本語", "日本", "", "plain", None]
+    df = spark.createDataFrame([(v,) for v in data], "s string")
+    rows = df.select(
+        _in_set(F.col("s"), values).alias("got"),
+        F.col("s").isin(*values).alias("want"),
+    ).collect()
+    assert [r["got"] for r in rows] == [r["want"] for r in rows]
+    assert [r["got"] for r in rows] == [v in values if v is not None else None for v in data]
+
+
+def test_in_set_empty_is_false_and_nul_rejected(spark):
+    import pytest
+
+    from identity_matching_spark.operators.blacklist import _in_set
+
+    df = spark.createDataFrame([("a",), (None,)], "s string")
+    assert [r[0] for r in df.select(_in_set(F.col("s"), frozenset())).collect()] == [False, False]
+    # NUL is the separator the set crosses to the JVM with
+    with pytest.raises(ValueError, match="NUL"):
+        _in_set(F.col("s"), frozenset({"a\x00b"}))
+
+
+def test_popular_name_plan_is_inset(spark, capsys):
+    """Over the 1,024 vendored popular names the predicate still plans as
+    one ``InSet`` — the same physical plan ``Column.isin`` gives."""
+    b = Blacklist.default()
+    df = spark.createDataFrame([("alex",), ("zz-not-a-name",)], "s string")
+    got = df.where(b.is_popular_name(F.col("s")))
+    got.explain()
+    plan = capsys.readouterr().out
+    assert "INSET" in plan
+    df.where(F.col("s").isin(*b.popular_names)).explain()
+    assert capsys.readouterr().out == plan
+    assert [r["s"] for r in got.collect()] == ["alex"]

@@ -314,10 +314,12 @@ def test_migrate_flat_bronze_recovers_full_corpus(spark, tmp_path):
     assert migrate_flat_bronze(bronze) == 0
 
 
-def test_gc_scoped_to_commit_buckets_full_sweep_on_open(spark, tmp_path):
+def test_gc_scoped_to_commit_buckets_full_sweep_on_first_commit(spark, tmp_path):
     """VERDICT r5 #3: commit-time GC walks only the batch's affected
     buckets; an orphan generation planted in an UNtouched bucket survives
-    the commit but is swept by the next open."""
+    the commit and a later open (opening never deletes: a reader must not
+    sweep a writer's unpublished leaves), and is swept by the first commit
+    of the next handle."""
     import os
 
     bl = Blacklist.testing()
@@ -330,7 +332,7 @@ def test_gc_scoped_to_commit_buckets_full_sweep_on_open(spark, tmp_path):
     )
     d_ids = _full_persons(spark, delta).select("id")
     touched_buckets = set(
-        _collect_buckets(d_ids, state.bucket_expr("persons_silver"))
+        _collect_buckets(state, {"persons_silver": d_ids})["persons_silver"]
     )
     orphan_bucket = next(b for b in range(8) if b not in touched_buckets)
     orphan = os.path.join(
@@ -341,8 +343,10 @@ def test_gc_scoped_to_commit_buckets_full_sweep_on_open(spark, tmp_path):
 
     fold_batch(state, _full_persons(spark, delta), bl, batch_id=1)
     assert os.path.isdir(orphan), "commit-time GC must skip untouched buckets"
-    IncrementalState(spark, str(tmp_path), n_buckets=8)  # open → full sweep
-    assert not os.path.isdir(orphan), "open-time sweep must collect orphans"
+    reopened = IncrementalState(spark, str(tmp_path), n_buckets=8)
+    assert os.path.isdir(orphan), "opening a state must not delete leaves"
+    fold_batch(reopened, _full_persons(spark, delta), bl, batch_id=2)
+    assert not os.path.isdir(orphan), "a handle's first commit must sweep orphans"
 
 
 def test_max_bucket_drop_counter(spark):
